@@ -2,50 +2,41 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+/** A memoized build stage: `clear` drops its memo and nothing else,
+  * `build` rebuilds it for a data dir. [[Bench.buildStages]] lists
+  * every stage once; [[Bench]] and [[BenchSome]] iterate that list. */
+final case class BuildStage(name: String, clear: () => Unit,
+    build: (SparkSession, String) => Any)
+
 /** Driver-run benchmark: every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR, JSON to stdout (BENCH_r{N}.json).
+  * SPARK_GRAFT_SF_DIR, JSON to stdout and `BENCH_FULL.json`.
   *
   * Queries are forced through a `noop`-format write so the FULL plan
   * executes (a bare `count()` would let Catalyst prune projections and
-  * under-report the work). AQE is on — it coalesces the post-shuffle
-  * partitions the sf0.1 data doesn't need and re-plans skewed joins, the
-  * same configuration a production cluster would run.
+  * under-report the work). AQE is on, the configuration a production
+  * cluster would run.
   *
   * Timing protocol: [[Sweeps]] full passes over the suite, reporting
-  * each query's MIN with its observed max−min `spread` alongside —
-  * host timings here swing ±20% run to run (documented across rounds),
-  * so a single sample cannot distinguish a regression from noise; the
-  * min approximates steady-state throughput and the spread makes the
-  * noise floor part of the artifact, so regressions are decidable from
-  * the JSON alone. Sweep 1 additionally pays each plan's one-time cost
-  * (codegen compile, AQE canonicalization).
+  * each query's MIN with its observed max−min `spread` alongside — a
+  * single sample cannot distinguish a regression from host noise. An
+  * untimed warmup first runs one query and builds every stage, so
+  * sweep timings measure the steady state; a warmup failure is recorded
+  * under `warmup_failed` and counted in `failed`.
   *
-  * The shared near-dup pair stage ([[operators.Dedup.ngramPairs]]) is
-  * cleared and then REBUILT as its own timed entry
-  * (`dedup_pairs_build`) at the top of every sweep: the build is priced
-  * exactly once per sweep under its own name instead of landing on
-  * whichever family query happens to run first (round 4 billed it to
-  * `dedup_canonical` and the 8-11 s build cost showed up as spread on
-  * different family members across sweeps), and every dedup-family
-  * query then measures pure consumption of the materialized rows — the
-  * accounting a real pipeline run has.
+  * Each sweep clears and rebuilds every [[buildStages]] entry as its own
+  * timed `*_build` entry, so a shared build is priced exactly once per
+  * sweep under its own name and every consuming query measures pure
+  * consumption of the memo — the accounting a real pipeline run has.
   *
-  * Artifact-capture contract (the round-4 lesson): the driver keeps
-  * only the LAST ~2000 characters of the run's output, and sbt appends
-  * a ~75-char `[success]` line after ours — a single 4-5 KB JSON line
-  * loses its head (round 4's captured artifact contained only the
-  * spread map; the total and minimums survived nowhere but
-  * BASELINE.md). So the emission is three-fold:
+  * Emission is three-fold, because the run's captured output keeps
+  * only its last ~2000 characters:
   *   1. the FULL result (3-decimal minimums + spreads + total) is
-  *      written to `BENCH_FULL.json` in the working directory — it
-  *      lands in the repo and survives any stdout truncation;
-  *   2. a verbose one-line JSON (same content) prints first, for eyes
-  *      on a local run;
+  *      written to `BENCH_FULL.json` in the working directory;
+  *   2. a verbose one-line JSON (same content) prints first;
   *   3. a COMPACT line prints LAST, sized well under the capture
   *      window: the most expensive per-query minimums individually
   *      (greedy by cost until the character budget), the cheap rest
-  *      aggregated as {n, sum}, and the TOTAL at the line's end so
-  *      even a truncated capture retains the gate numbers. */
+  *      aggregated as {n, sum}, and the TOTAL at the line's end. */
 /** Cumulative stage-level I/O counters — shuffle read/write and spill
   * bytes summed over every completed stage since registration. Wall-time
   * at local[32]/sf0.1 cannot see a plan that silently starts moving 10×
@@ -88,47 +79,77 @@ object Bench {
     * the compact line's own framing, with safety margin. */
   val CompactBudget = 1500
 
+  /** Every memoized build stage, in sweep order (later stages read
+    * earlier stages' memos). */
+  val buildStages: Seq[BuildStage] = {
+    import operators._
+    import kmeans.KMeansQueries
+    Seq(
+      BuildStage("dedup_pairs_build", () => Dedup.clearPairCache(), Dedup.ngramPairs),
+      BuildStage("dedup_labels_build", () => Dedup.clearLabelCache(), Dedup.ngramLabels),
+      BuildStage("ann_train_build", () => Similarity.clearAnnCache(), Similarity.trainAnn),
+      BuildStage("knn_graph_build", () => Similarity.clearKnnCache(), Similarity.knnEdges),
+      BuildStage("kmeans_train_build", () => KMeansQueries.clearFitCache(),
+        KMeansQueries.trainFit),
+      BuildStage("er_link_build", () => EntityResolution.clearLinkCache(),
+        EntityResolution.pairsOf),
+      BuildStage("dsir_train_build", () => DataSelection.clearTrainCache(),
+        DataSelection.trainWeights),
+      BuildStage("dsir_score_build", () => DataSelection.clearScoreCache(),
+        DataSelection.trainScored),
+      BuildStage("lm_score_build", () => LangModel.clearScoreCache(), LangModel.trainScores),
+      BuildStage("quality_score_build", () => TextAnalysis.clearScoreCache(),
+        TextAnalysis.trainQualityScores),
+      BuildStage("bpe_train_build", () => TextAnalysis.clearBpeCache(), TextAnalysis.trainBpe),
+      BuildStage("clf_train_build", () => LangModel.clearClfCache(),
+        LangModel.clfLearnedWeights))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local()
-    // Untimed warmup: JVM/codegen/parquet-footer costs land here, not on
-    // the alphabetically-first query — and the pair-stage build runs
-    // once untimed too, so the per-sweep `dedup_pairs_build` entries
-    // measure the steady-state rebuild instead of billing sweep 1 for
-    // first-touch codegen (round-4's 12 s build spread was exactly
-    // that cold-start landing in the spread column).
-    try {
-      SparkEntry.queries("q1_agg")(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      operators.Dedup.clearPairCache()
-      operators.Dedup.ngramPairs(spark, sfDir)
-      operators.Dedup.clearLabelCache()
-      operators.Dedup.ngramLabels(spark, sfDir)
-      operators.Similarity.clearTrainCache()
-      operators.Similarity.trainAnn(spark, sfDir)
-      operators.Similarity.knnEdges(spark, sfDir)
-      kmeans.KMeansQueries.clearFitCache()
-      kmeans.KMeansQueries.trainFit(spark, sfDir)
-      operators.EntityResolution.clearLinkCache()
-      operators.EntityResolution.linkBuild(spark, sfDir)
-      operators.DataSelection.clearTrainCache()
-      operators.DataSelection.trainWeights(spark, sfDir)
-      operators.DataSelection.clearScoreCache()
-      operators.DataSelection.trainScored(spark, sfDir)
-      operators.LangModel.clearScoreCache()
-      operators.LangModel.trainScores(spark, sfDir)
-    } catch { case _: Throwable => }
     // GRAFT_BENCH_ONLY=<comma-separated names>: targeted re-bench of a
-    // family under iteration (the full sf10 suite is a ~2 h single
-    // sweep — measuring one fix must not cost that). The per-sweep
-    // build stages are SKIPPED and their caches stay warm from the
-    // warmup, so filtered query times measure the same steady state the
-    // full run does; the emitted JSON is a partial artifact for
-    // iteration, never a BENCH_FULL_* replacement.
+    // family under iteration; the emitted JSON is a partial artifact,
+    // never a BENCH_FULL_* replacement.
     val only = sys.env.get("GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(n => only.forall(_.contains(n._1)))
+    val spark = GraftSession.local()
+    val (full, compact) = run(spark, sfDir, buildStages, only)
+    println(full)
+    try {
+      val out = java.nio.file.Paths.get(sys.env.getOrElse("GRAFT_BENCH_OUT", "BENCH_FULL.json"))
+      java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}")
+    }
+    // the compact gate line prints LAST, after spark.stop(), so no
+    // shutdown logging can land between it and the capture window
+    spark.stop()
+    println(compact)
+  }
+
+  /** The warmup and [[Sweeps]] timed sweeps over `stages` and the
+    * queries `only` names (all when None); returns the full JSON line
+    * (the `BENCH_FULL.json` content) and the compact gate line. With
+    * `only` set, the sweeps skip the stage clears and rebuilds: the
+    * warmup already built every stage, so filtered query times measure
+    * the same steady state a full run does. */
+  def run(spark: SparkSession, sfDir: String, stages: Seq[BuildStage],
+      only: Option[Set[String]]): (String, String) = {
+    // runs `body`, logging and returning what it threw
+    def attempt(name: String)(body: => Any): Option[Throwable] =
+      try { body; None }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Some(e)
+      }
+    val warmupFailed = scala.collection.mutable.LinkedHashMap[String, String]()
+    def warm(name: String)(body: => Any): Unit =
+      attempt(s"warmup $name")(body).foreach(e => warmupFailed(name) = e.getClass.getName)
+    def query(name: String): Unit =
+      SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
+    warm("q1_agg")(query("q1_agg"))
+    stages.foreach(b => warm(b.name) { b.clear(); b.build(spark, sfDir) })
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     val times = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     // per-query I/O (shuffle read / shuffle write / spill bytes), the
@@ -137,18 +158,13 @@ object Bench {
     val listener = new IoListener
     spark.sparkContext.addSparkListener(listener)
     val io = scala.collection.mutable.Map[String, (Long, Long, Long)]()
-    def timed(name: String)(run: => Unit): Unit = {
+    def timed(name: String)(body: => Any): Unit = {
       // settle GC debt from earlier queries so it isn't billed here
       System.gc()
       org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
       val before = listener.snapshot
       val t0 = System.nanoTime()
-      val ok =
-        try { run; true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
+      val ok = attempt(name)(body).isEmpty
       // a failed run records -1, never its time-to-exception — a
       // breakage must not read as a speedup in the JSON line
       times(name) = times(name) :+ (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
@@ -160,105 +176,21 @@ object Bench {
         io(name) = (math.max(p._1, d._1), math.max(p._2, d._2), math.max(p._3, d._3))
       }
     }
-    for (_ <- 1 to Sweeps) if (only.nonEmpty) {
-      // targeted mode: no cache clears, no build-stage pricing — the
-      // warmup above already built every shared table once
-      names.foreach { case (name, fn) =>
-        timed(name) { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
-      }
-    } else {
-      operators.Dedup.clearPairCache()
-      // the shared pair-stage build, priced once per sweep as its own
-      // entry (ngramPairs materializes eagerly via localCheckpoint, so
-      // timing the call covers the full candidates+verify build)
-      timed("dedup_pairs_build") { operators.Dedup.ngramPairs(spark, sfDir) }
-      // the membership fixpoint above the pair list (four consumers:
-      // components / canonical / cluster_sizes / pipeline), priced once
-      // per sweep under its own name
-      operators.Dedup.clearLabelCache()
-      timed("dedup_labels_build") { operators.Dedup.ngramLabels(spark, sfDir) }
-      // ANN training (IVF quantizer + PQ codebook/encode), train-once
-      // semantics priced once per sweep under its own name — the
-      // round-5 verdict's ann_ivf/ann_pq spreads were this training
-      // re-running inside every query call (an ANN index trains once
-      // and serves many queries; the per-call retraining was the
-      // bench artifact, not the operator)
-      operators.Similarity.clearTrainCache()
-      timed("ann_train_build") {
-        operators.Similarity.trainAnn(spark, sfDir)
-      }
-      // the k-NN edge list (two consumers: the graph read + the label
-      // spread), built once per sweep under its own name — the spread
-      // previously re-ran the whole bucket join per call
-      timed("knn_graph_build") {
-        operators.Similarity.knnEdges(spark, sfDir); ()
-      }
-      // the contract-chain Lloyd model (kmeans_fit / kmeans_fit_trace
-      // share one trajectory), trained once per sweep under its own
-      // name — same fit-once accounting as the ANN entry above
-      kmeans.KMeansQueries.clearFitCache()
-      timed("kmeans_train_build") {
-        kmeans.KMeansQueries.trainFit(spark, sfDir)
-      }
-      // the ER family's shared edge list + component fixpoint (five
-      // consumers), same build-once accounting as the entries above
-      operators.EntityResolution.clearLinkCache()
-      timed("er_link_build") {
-        operators.EntityResolution.linkBuild(spark, sfDir)
-      }
-      // the DSIR weight-table fit (one featurization + ≤1024-row
-      // collect), trained once per sweep under its own name — the
-      // dsir_* queries then measure pure single-scan scoring
-      operators.DataSelection.clearTrainCache()
-      timed("dsir_train_build") {
-        operators.DataSelection.trainWeights(spark, sfDir); ()
-      }
-      // the score-once stage above the weight fit: the per-document
-      // weight/score tables (one row per doc, localCheckpoint) that
-      // the dsir_* and lm_score/lm_buckets* queries consume — priced
-      // once per sweep each, same accounting as the entries above
-      operators.DataSelection.clearScoreCache()
-      timed("dsir_score_build") {
-        operators.DataSelection.trainScored(spark, sfDir); ()
-      }
-      operators.LangModel.clearScoreCache()
-      timed("lm_score_build") {
-        operators.LangModel.trainScores(spark, sfDir); ()
-      }
-      // the per-document quality-score table (quality_score + the
-      // source_quota pair; the approx cut reads it twice)
-      operators.TextAnalysis.clearScoreCache()
-      timed("quality_score_build") {
-        operators.TextAnalysis.trainQualityScores(spark, sfDir); ()
-      }
-      // the BPE merge-table trainer (one word count + driver merge
-      // loop), trained once per sweep — bpe_train/bpe_vocab/
-      // tok_fertility_learned then read the memoized table
-      operators.TextAnalysis.clearBpeCache()
-      timed("bpe_train_build") {
-        operators.TextAnalysis.trainBpe(spark, sfDir); ()
-      }
-      // the learned-classifier NB weight fit (one token scan into a
-      // 64-bucket aggregate + 64-row collect) — quality_classifier then
-      // measures pure literal-lookup scoring
-      operators.LangModel.clearClfCache()
-      timed("clf_train_build") {
-        operators.LangModel.clfLearnedWeights(spark, sfDir); ()
-      }
-      names.foreach { case (name, fn) =>
-        timed(name) { fn(spark, sfDir).write.mode("overwrite").format("noop").save() }
-      }
+    for (_ <- 1 to Sweeps) {
+      if (only.isEmpty) stages.foreach { b => b.clear(); timed(b.name)(b.build(spark, sfDir)) }
+      names.foreach(n => timed(n)(query(n)))
     }
     val results = times.keys.toSeq.sorted.map { name =>
       val ts = times(name)
       if (ts.contains(-1.0)) (name, -1.0, -1.0)
       else (name, ts.min, ts.max - ts.min)
     }
-    // failed queries report -1 in `queries` but are EXCLUDED from the
+    // failed entries report -1 in `queries` but are EXCLUDED from the
     // total (summing the sentinel would make a breakage read as a
-    // speedup); the explicit count makes a partial run unmistakable
+    // speedup); the explicit count — entries that failed in a sweep or
+    // in the warmup — makes a partial run unmistakable
     val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
-    val failed = results.count(_._2 < 0)
+    val failed = (results.filter(_._2 < 0).map(_._1) ++ warmupFailed.keys).distinct.size
     val sfName = new java.io.File(sfDir).getName
 
     def obj(f: (String, Double, Double) => Double): String =
@@ -275,23 +207,14 @@ object Bench {
       val vs = results.flatMap(r => io.get(r._1))
       s"""{"read_mb":${mb(vs.map(_._1).sum)},"write_mb":${mb(vs.map(_._2).sum)},"spill_mb":${mb(vs.map(_._3).sum)}}"""
     }
+    val warmupStr = warmupFailed.map { case (k, c) => s""""$k":"$c"""" }
+      .mkString("{", ",", "}")
     val full =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","spread":${obj((_, _, sp) => sp)},"queries":${obj((_, mn, _) => mn)},"io_mb":$ioStr,"io_total":$ioTot,"sweeps":$Sweeps,"failed":$failed,"sf":"$sfDir"}"""
-    println(full)
-    try {
-      val out = java.nio.file.Paths.get(sys.env.getOrElse("GRAFT_BENCH_OUT", "BENCH_FULL.json"))
-      java.nio.file.Files.write(out, (full + "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] BENCH_FULL.json write failed: ${e.getMessage}")
-    }
-
-    // compact gate line, printed LAST (after spark.stop() so no
-    // shutdown logging can land between it and the capture window).
-    // Failures sort FIRST (Double.MaxValue key): their -1 sentinel
-    // would otherwise rank them as if they cost 1 s and let them be
-    // displaced from the captured artifact by a tight budget — a
-    // breakage must always be visible in the compact line (round-5
-    // ADVICE)
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","spread":${obj((_, _, sp) => sp)},"queries":${obj((_, mn, _) => mn)},"io_mb":$ioStr,"io_total":$ioTot,"sweeps":$Sweeps,"failed":$failed,"warmup_failed":$warmupStr,"sf":"$sfDir"}"""
+    // compact gate line. Failures sort FIRST (Double.MaxValue key):
+    // their -1 sentinel would otherwise rank them as if they cost 1 s
+    // and let them be displaced from the captured artifact by a tight
+    // budget — a breakage must always be visible in the compact line
     val byCost = results.sortBy { case (_, mn, _) =>
       -(if (mn < 0) Double.MaxValue else mn)
     }
@@ -308,7 +231,6 @@ object Bench {
     val restStr = f""","rest":{"n":${rest.size},"sum":${rest.map(_._2).sum}%.3f}"""
     val compact =
       f"""{"q":{$kept}$restStr,"metric":"total","value":$total%.3f,"unit":"sec","io_total":$ioTot,"sweeps":$Sweeps,"failed":$failed,"sf":"$sfName","fullAt":"BENCH_FULL.json"}"""
-    spark.stop()
-    println(compact)
+    (full, compact)
   }
 }

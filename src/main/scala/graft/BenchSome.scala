@@ -3,59 +3,26 @@ package graft
 /** Subset benchmark for iterating on individual operators without
   * paying a full [[Bench]] suite run: `runMain graft.BenchSome q1_agg
   * kmeans_train_build er_link_build` times just the named entries
-  * (same noop-write protocol, same build-stage pseudo-entries as
-  * [[Bench]]) for [[Bench.Sweeps]] sweeps against SPARK_GRAFT_SF_DIR
-  * and prints one JSON line. A tuning loop reads this; the committed
-  * BENCH artifacts always come from the full [[Bench]]. */
+  * (same noop-write protocol; a build-stage name clears and rebuilds
+  * that [[Bench.buildStages]] entry) for [[Bench.Sweeps]] sweeps against
+  * SPARK_GRAFT_SF_DIR and prints one JSON line. */
 object BenchSome {
+  private val builds = Bench.buildStages.map(b => b.name -> b).toMap
+
+  /** The names that are neither a build stage nor a registered query. */
+  def unknown(names: Seq[String]): Seq[String] =
+    names.filterNot(n => builds.contains(n) || SparkEntry.queries.contains(n))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.local()
-    val builds: Map[String, () => Unit] = Map(
-      "dedup_pairs_build" -> (() => {
-        operators.Dedup.clearPairCache(); operators.Dedup.ngramPairs(spark, sfDir); ()
-      }),
-      "ann_train_build" -> (() => {
-        operators.Similarity.clearTrainCache(); operators.Similarity.trainAnn(spark, sfDir)
-      }),
-      "kmeans_train_build" -> (() => {
-        kmeans.KMeansQueries.clearFitCache(); kmeans.KMeansQueries.trainFit(spark, sfDir)
-      }),
-      "er_link_build" -> (() => {
-        operators.EntityResolution.clearLinkCache()
-        operators.EntityResolution.linkBuild(spark, sfDir)
-      }),
-      "knn_graph_build" -> (() => {
-        operators.Similarity.clearTrainCache()
-        operators.Similarity.knnEdges(spark, sfDir); ()
-      }),
-      "dsir_train_build" -> (() => {
-        operators.DataSelection.clearTrainCache()
-        operators.DataSelection.trainWeights(spark, sfDir); ()
-      }),
-      "dsir_score_build" -> (() => {
-        operators.DataSelection.clearScoreCache()
-        operators.DataSelection.trainScored(spark, sfDir); ()
-      }),
-      "lm_score_build" -> (() => {
-        operators.LangModel.clearScoreCache()
-        operators.LangModel.trainScores(spark, sfDir); ()
-      }),
-      "quality_score_build" -> (() => {
-        operators.TextAnalysis.clearScoreCache()
-        operators.TextAnalysis.trainQualityScores(spark, sfDir); ()
-      }),
-      "bpe_train_build" -> (() => {
-        operators.TextAnalysis.clearBpeCache()
-        operators.TextAnalysis.trainBpe(spark, sfDir); ()
-      }))
     // dedupe: a repeated arg would double-count its sweeps. Sweeps >= 1
     // is enforced by Bench.Sweeps' own initializer (referencing it at
     // all throws on a bad GRAFT_BENCH_SWEEPS), so no re-check here —
     // the time vectors below can never be empty.
     val names = (if (args.nonEmpty) args.toSeq else Seq("q1_agg")).distinct
-    val unknown = names.filterNot(n => builds.contains(n) || SparkEntry.queries.contains(n))
-    require(unknown.isEmpty, s"unknown entries: ${unknown.mkString(",")}")
+    val bad = unknown(names)
+    require(bad.isEmpty, s"unknown entries: ${bad.mkString(",")}")
+    val spark = GraftSession.local()
     val times = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     for (sweep <- 0 to Bench.Sweeps) { // sweep 0 = untimed warmup
@@ -63,7 +30,7 @@ object BenchSome {
         System.gc()
         val t0 = System.nanoTime()
         builds.get(name) match {
-          case Some(b) => b()
+          case Some(b) => b.clear(); b.build(spark, sfDir)
           case None =>
             SparkEntry.queries(name)(spark, sfDir)
               .write.mode("overwrite").format("noop").save()

@@ -7,10 +7,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The train-once memo's contract (round-10): one fit per live key,
-  * LRU-bounded, and — the round-9 ADVICE fix — fits run OUTSIDE the
-  * map monitor, so concurrent different-key fits proceed in parallel
-  * while same-key racers share one fit. */
+/** The train-once memo's contract: one fit per live key, LRU-bounded,
+  * and fits run OUTSIDE the map monitor, so concurrent different-key
+  * fits proceed in parallel while same-key racers share one fit — on
+  * the bare cache and on an engine memo built on it. */
 class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession = {
     SparkSession.getActiveSession.foreach(_.stop())
@@ -114,5 +114,42 @@ class SessionCacheSpec extends AnyFunSuite with BeforeAndAfterAll {
     release.countDown(); t.join(30000)
     assert(ev.toArray.toList == List(7),
       "the mid-build-evicted fit must release its own value on completion")
+  }
+
+  test("engine memo: different-key contractModel builds overlap; same-key callers share one") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sf = "/root/testdata/sf0.001"
+    // the most Spark jobs in flight at once: two builds holding one
+    // monitor run their jobs strictly one after another
+    val active = new AtomicInteger
+    val peak = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        peak.accumulateAndGet(active.incrementAndGet(), (x, y) => math.max(x, y)); ()
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { active.decrementAndGet(); () }
+    }
+    def concurrently[T](n: Int)(f: Int => T): Seq[T] = {
+      val go = new CountDownLatch(1)
+      val out = new java.util.concurrent.ConcurrentHashMap[Int, T]()
+      val ts = (0 until n).map(i => new Thread(() => { go.await(); out.put(i, f(i)); () }))
+      ts.foreach(_.start()); go.countDown(); ts.foreach(_.join(120000))
+      (0 until n).map(out.get)
+    }
+    kmeans.KMeansQueries.clearFitCache()
+    spark.sparkContext.addSparkListener(l)
+    try {
+      // path variants of one dir are distinct keys over the same data
+      val Seq(a, b) = concurrently(2)(i => kmeans.KMeansQueries.contractModel(spark, sf + "/." * i))
+      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext)
+      assert(a != null && b != null && (a ne b))
+      assert(peak.get >= 2, "different-key builds must run in parallel, not under one lock")
+      kmeans.KMeansQueries.clearFitCache()
+      val Seq(c, d) = concurrently(2)(_ => kmeans.KMeansQueries.contractModel(spark, sf))
+      assert(c != null && (c eq d), "same-key callers must share one build")
+    } finally {
+      spark.sparkContext.removeSparkListener(l)
+      kmeans.KMeansQueries.clearFitCache()
+    }
   }
 }

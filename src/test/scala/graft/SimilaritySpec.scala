@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 
 /** SURVEY.md §2.D specs: brute-force exactness invariants and recall of
   * the approximate (IVF / LSH) paths against it on sf0.001. */
@@ -252,5 +252,27 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     val again = Similarity.embeddingClusters(spark, sf).collect()
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq,
       "hash-rank seeds make the clustering run-deterministic")
+  }
+
+  test("clears release the PQ codes and k-NN checkpoints; evicted frames keep executing") {
+    Similarity.clearTrainCache()
+    val codes = Similarity.pqModel(spark, sf).codes
+    val edges = Similarity.knnEdges(spark, sf)
+    val (codeRows, edgeRows) = (codes.count(), edges.count())
+    assert(Dedup.checkpointLive(codes) && Dedup.checkpointLive(edges))
+    // four more keys (path variants of the same dir) evict the first:
+    // eviction drops the entry and leaves a held frame executable
+    val variants = (1 to 4).map(i => sf + "/." * i)
+    variants.foreach { d => Similarity.pqModel(spark, d); Similarity.knnEdges(spark, d) }
+    assert(codes.count() == codeRows && edges.count() == edgeRows,
+      "a held frame must survive its cache eviction")
+    val lastCodes = Similarity.pqModel(spark, variants.last).codes
+    val lastEdges = Similarity.knnEdges(spark, variants.last)
+    Similarity.clearKnnCache()
+    assert(!Dedup.checkpointLive(lastEdges), "the k-NN clear must release its blocks")
+    assert(Dedup.checkpointLive(lastCodes), "the k-NN clear must leave the ANN memo alone")
+    Similarity.clearAnnCache()
+    assert(!Dedup.checkpointLive(lastCodes), "the ANN clear must release the PQ codes")
+    assert(Similarity.knnEdges(spark, sf) ne edges, "the first key was evicted")
   }
 }

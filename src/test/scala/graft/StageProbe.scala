@@ -64,7 +64,6 @@ object StageProbe {
       case "erlink" =>
         time("full linkPairs + labels") {
           operators.EntityResolution.clearLinkCache()
-          operators.EntityResolution.linkBuild(spark, dir)
           operators.EntityResolution.pairsOf(spark, dir)
         }
         val pairs = operators.EntityResolution.pairsOf(spark, dir)
